@@ -101,7 +101,9 @@ def delete_matching(
 ) -> DataFrame:
     """Remove target rows whose key appears in ``deletes`` (J2) — the
     DataFrame form of ``DELETE FROM t WHERE EXISTS (...)``: a left
-    anti-join, broadcast when the delete set is small.
+    anti-join, broadcast when the delete set is small.  Like ``EXISTS``,
+    the anti-join ignores repeated keys in ``deletes``, so they need no
+    dedup shuffle first.
 
     ``ts_guard``: optional column name carried by BOTH frames; when set, a
     matching key only deletes rows whose guard value is ``<=`` the delete's
@@ -112,7 +114,7 @@ def delete_matching(
     """
     keys = list(keys)
     if ts_guard is None:
-        return target.join(deletes.select(*keys).distinct(), on=keys, how="left_anti")
+        return target.join(deletes.select(*keys), on=keys, how="left_anti")
     d = (
         deletes.select(*keys, F.col(ts_guard).alias("_del_ts"))
         .groupBy(*keys)
@@ -289,16 +291,21 @@ class TableSink:
         raise NotImplementedError
 
     def delete(self, cfg: TableConfig, keys_df: DataFrame, ts_guard=None) -> None:
-        """Delete rows matching ``keys_df``'s keys.  With ``ts_guard``,
-        ``keys_df`` also carries the guard column and only target rows
-        at-or-before the delete's timestamp are removed."""
+        """Delete rows matching ``keys_df``'s keys; a key may repeat.  With
+        ``ts_guard``, ``keys_df`` also carries the guard column and only
+        target rows at-or-before the delete's timestamp (the latest one,
+        for a repeated key) are removed."""
         raise NotImplementedError
 
     def flush(self, cfg: TableConfig) -> None:
         """Called once per table at the end of a batch, after all of that
-        batch's mutations.  Sinks that write eagerly (files, catalogs)
-        ignore it; lazy sinks materialize here so a batch costs ONE
-        materialization instead of one per mutation."""
+        batch's mutations: the table's commit point.  Sinks that execute
+        each statement (catalogs) ignore it.  The local sinks buffer a
+        batch's mutations as one lazy plan per table and commit it here,
+        so a batch costs one materialization (memory) or one copy-on-write
+        rewrite (parquet) per table instead of one per mutation.  Under
+        ``continue_on_error`` a failed flush is logged and that table's
+        buffered mutations for the batch are dropped."""
 
     def _guard(self, action: str, fn) -> None:
         try:
@@ -309,79 +316,121 @@ class TableSink:
             logger.exception("sink %s failed (continue_on_error)", action)
 
 
-class MemoryTableSink(TableSink):
-    """In-memory sink: tables are DataFrames.
+class _BufferedSink(TableSink):
+    """Apply semantics shared by the local sinks.
 
-    Mutations build a LAZY plan chain; :meth:`flush` (called by the
-    pipeline once per table per batch) checkpoints the final state, so a
-    batch of append+merge+delete costs one materialization instead of
-    three.  Reading an unflushed table is still correct — just lazy.
+    A table's mutations within a batch build ONE lazy plan over its
+    committed state — schema evolution (:func:`merge_schemas`), then
+    :func:`merge_into` / :func:`delete_matching` — which :meth:`flush`
+    commits.  ``exists`` and ``read`` see the pending plan.  Subclasses
+    say where committed state lives (``_is_committed``, ``_read_committed``,
+    ``_commit``) and may take an append with nothing pending straight into
+    it (``_append_in_place``).
     """
 
     def __init__(self, continue_on_error: bool = False):
-        self.tables: dict[tuple[str, str], DataFrame] = {}
         self.continue_on_error = continue_on_error
+        self._pending: dict[tuple[str, str], DataFrame] = {}
+
+    def _is_committed(self, db: str, table: str) -> bool:
+        raise NotImplementedError
+
+    def _read_committed(self, spark: SparkSession, db: str, table: str) -> DataFrame:
+        raise NotImplementedError
+
+    def _commit(self, cfg: TableConfig, plan: DataFrame) -> None:
+        raise NotImplementedError
+
+    def _append_in_place(self, cfg: TableConfig, df: DataFrame) -> bool:
+        return False
+
+    def _exists(self, db: str, table: str) -> bool:
+        return (db, table) in self._pending or self._is_committed(db, table)
+
+    def _current(self, spark: SparkSession, db: str, table: str) -> DataFrame:
+        plan = self._pending.get((db, table))
+        return plan if plan is not None else self._read_committed(spark, db, table)
 
     def exists(self, db, table):
-        return (db, table) in self.tables
+        return self._exists(db, table)
 
     def read(self, spark, db, table):
-        return self.tables[(db, table)]
+        return self._current(spark, db, table)
 
-    def create_if_not_exists(self, cfg, schema):
+    def _stage(self, cfg: TableConfig, df: DataFrame, combine) -> None:
+        """Pending plan := ``combine(current, df)``, both aligned to the
+        evolved schema — or ``df`` itself when the table does not exist."""
         key = (cfg.db, cfg.table)
-        if key not in self.tables:
-            from cdc_data_lake_pyspark_spark.localrel import empty_frame
-
-            spark = SparkSession.getActiveSession()
-            self.tables[key] = empty_frame(spark, schema)
+        if not self._exists(*key):
+            self._pending[key] = df
+            return
+        base = self._current(df.sparkSession, *key)
+        evolved = merge_schemas(base.schema, df.schema)
+        self._pending[key] = combine(
+            align_to_schema(base, evolved), align_to_schema(df, evolved)
+        )
 
     def append(self, cfg, df):
         def _do():
-            key = (cfg.db, cfg.table)
-            if key in self.tables:
-                base = self.tables[key]
-                evolved = merge_schemas(base.schema, df.schema)
-                base = align_to_schema(base, evolved)
-                incoming = align_to_schema(df, evolved)
-                self.tables[key] = base.unionByName(incoming)
-            else:
-                self.tables[key] = df
+            if (cfg.db, cfg.table) in self._pending or not self._append_in_place(cfg, df):
+                self._stage(cfg, df, DataFrame.unionByName)
 
         self._guard("append", _do)
 
     def merge(self, cfg, df, ts_guard=None):
-        def _do():
-            key = (cfg.db, cfg.table)
-            if key not in self.tables:
-                self.tables[key] = df
-                return
-            base = self.tables[key]
-            evolved = merge_schemas(base.schema, df.schema)
-            base = align_to_schema(base, evolved)
-            incoming = align_to_schema(df, evolved)
-            self.tables[key] = merge_into(
-                base, incoming, cfg.primary_keys, ts_guard=ts_guard
-            )
+        def _combine(base, updates):
+            return merge_into(base, updates, cfg.primary_keys, ts_guard=ts_guard)
 
-        self._guard("merge", _do)
+        self._guard("merge", lambda: self._stage(cfg, df, _combine))
 
     def delete(self, cfg, keys_df, ts_guard=None):
         def _do():
             key = (cfg.db, cfg.table)
-            if key not in self.tables:
+            if not self._exists(*key):
                 return
-            self.tables[key] = delete_matching(
-                self.tables[key], keys_df, cfg.primary_keys, ts_guard=ts_guard
+            base = self._current(keys_df.sparkSession, *key)
+            self._pending[key] = delete_matching(
+                base, keys_df, cfg.primary_keys, ts_guard=ts_guard
             )
 
         self._guard("delete", _do)
 
     def flush(self, cfg):
-        key = (cfg.db, cfg.table)
-        if key in self.tables:
-            # eager: the batch's source may be unpersisted right after
-            self.tables[key] = self.tables[key].localCheckpoint()
+        plan = self._pending.pop((cfg.db, cfg.table), None)
+        if plan is not None:
+            self._guard("flush", lambda: self._commit(cfg, plan))
+
+
+class MemoryTableSink(_BufferedSink):
+    """In-memory sink: committed tables are checkpointed DataFrames in
+    ``tables``.
+
+    Every mutation is buffered; :meth:`flush` (called by the pipeline once
+    per table per batch) checkpoints the pending plan, so a batch of
+    append+merge+delete costs one materialization instead of three.
+    Reading an unflushed table is still correct — just lazy.
+    """
+
+    def __init__(self, continue_on_error: bool = False):
+        super().__init__(continue_on_error)
+        self.tables: dict[tuple[str, str], DataFrame] = {}
+
+    def _is_committed(self, db, table):
+        return (db, table) in self.tables
+
+    def _read_committed(self, spark, db, table):
+        return self.tables[(db, table)]
+
+    def _commit(self, cfg, plan):
+        # eager: the batch's source may be unpersisted right after
+        self.tables[(cfg.db, cfg.table)] = plan.localCheckpoint()
+
+    def create_if_not_exists(self, cfg, schema):
+        if not self._exists(cfg.db, cfg.table):
+            from cdc_data_lake_pyspark_spark.localrel import empty_frame
+
+            spark = SparkSession.getActiveSession()
+            self.tables[(cfg.db, cfg.table)] = empty_frame(spark, schema)
 
 
 class SqlTableSink(TableSink):
@@ -395,11 +444,11 @@ class SqlTableSink(TableSink):
     ``tmp_<table>_{u|d}_<batch-part>`` like the reference's ephemeral
     relations (``:257-260``) and dropped after use (``:299-301``).
 
-    Requires a MERGE-capable catalog on the classpath (Iceberg runtime or
-    delta-spark) — not available in this container, so this sink is
-    exercised only through its SQL text in unit tests; the DataFrame
-    semantics it must produce are what MemoryTableSink/ParquetTableSink
-    implement and the oracle gate verifies.
+    Each statement commits on its own, so :meth:`flush` is a no-op here.
+    Requires a MERGE-capable catalog: Iceberg or Delta in production, or
+    the in-process LocalLake DSv2 catalog (``catalog/``), on which
+    ``tests/test_locallake_catalog.py`` executes this sink end to end and
+    checks its final state against :class:`MemoryTableSink`'s.
     """
 
     def __init__(
@@ -496,96 +545,101 @@ class SqlTableSink(TableSink):
         spark.sql(build_compaction_sql(self.catalog, db, table, using=self.using))
 
 
-class ParquetTableSink(TableSink):
+class ParquetTableSink(_BufferedSink):
     """Parquet-directory sink: each table is ``<root>/<db>/<table>``.
 
-    Locally stands in for the Iceberg/Delta table; merge/delete are
-    read-modify-overwrite (copy-on-write semantics — the reference's
-    default ``write.merge.mode``, ``tables.json:6-8``).  On a real
-    lakehouse the same pipeline calls a MERGE-capable sink with the SQL
-    generated by :func:`build_merge_sql`/:func:`build_delete_sql`.
+    Locally stands in for the Iceberg/Delta table with copy-on-write
+    semantics (the reference's default ``write.merge.mode``,
+    ``tables.json:6-8``).  On a real lakehouse the same pipeline calls a
+    MERGE-capable sink with the SQL generated by
+    :func:`build_merge_sql`/:func:`build_delete_sql`.
+
+    Commit model: a batch's merge and delete, and any append that follows
+    them or changes the table's schema, are buffered as one plan over the
+    table's files; :meth:`flush` rewrites the table ONCE from that plan
+    (write beside, then swap); a failed flush drops the plan, under
+    ``continue_on_error`` too, so the table keeps its pre-batch state
+    until the batch is replayed.  An append to a table with nothing pending
+    and an unchanged schema adds its files at once, so callers that never
+    flush still see it on disk.  The sink owns its directories: it reads
+    them back with the schema it wrote (or inferred once), so ``read`` and
+    ``exists`` launch no Spark job.
     """
 
     def __init__(self, root: str, continue_on_error: bool = False):
+        super().__init__(continue_on_error)
         self.root = root
-        self.continue_on_error = continue_on_error
+        self._schemas: dict[str, T.StructType] = {}
 
     def _path(self, db: str, table: str) -> str:
         return os.path.join(self.root, db, table)
 
-    def exists(self, db, table):
-        return os.path.isdir(self._path(db, table))
+    def _recover(self, path: str) -> None:
+        """Finish a swap that a crash interrupted (see :meth:`_overwrite`):
+        with no live directory the aside copy is the table's last committed
+        state, so it moves back; beside a live one it is garbage."""
+        aside = path + _ASIDE
+        if os.path.isdir(aside):
+            if os.path.isdir(path):
+                shutil.rmtree(aside, ignore_errors=True)
+            else:
+                os.replace(aside, path)
 
-    def read(self, spark, db, table):
-        return spark.read.parquet(self._path(db, table))
+    def _is_committed(self, db, table):
+        path = self._path(db, table)
+        self._recover(path)
+        return os.path.isdir(path)
+
+    def _schema(self, spark: SparkSession, path: str) -> T.StructType:
+        schema = self._schemas.get(path)
+        if schema is None:
+            schema = self._schemas[path] = spark.read.parquet(path).schema
+        return schema
+
+    def _read_committed(self, spark, db, table):
+        path = self._path(db, table)
+        self._recover(path)
+        return spark.read.schema(self._schema(spark, path)).parquet(path)
+
+    def _write(self, df: DataFrame, path: str, mode: str) -> None:
+        df.write.mode(mode).parquet(path)
+        self._schemas[path] = df.schema
 
     def create_if_not_exists(self, cfg, schema):
-        path = self._path(cfg.db, cfg.table)
-        if not os.path.isdir(path):
+        if not self._exists(cfg.db, cfg.table):
             from cdc_data_lake_pyspark_spark.localrel import empty_frame
 
             spark = SparkSession.getActiveSession()
-            empty_frame(spark, schema).write.mode("overwrite").parquet(path)
+            self._write(empty_frame(spark, schema), self._path(cfg.db, cfg.table), "overwrite")
 
-    def append(self, cfg, df):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            spark = df.sparkSession
-            if os.path.isdir(path):
-                base_schema = spark.read.parquet(path).schema
-                evolved = merge_schemas(base_schema, df.schema)
-                if [f.name for f in evolved.fields] != [
-                    f.name for f in base_schema.fields
-                ]:
-                    # schema evolution: rewrite base with the union schema
-                    base = align_to_schema(spark.read.parquet(path), evolved)
-                    self._overwrite(base.unionByName(align_to_schema(df, evolved)), path)
-                    return
-                align_to_schema(df, base_schema).write.mode("append").parquet(path)
-            else:
-                df.write.mode("append").parquet(path)
+    def _append_in_place(self, cfg, df):
+        path = self._path(cfg.db, cfg.table)
+        if not self._is_committed(cfg.db, cfg.table):
+            self._write(df, path, "append")
+            return True
+        base_schema = self._schema(df.sparkSession, path)
+        evolved = merge_schemas(base_schema, df.schema)
+        if len(evolved.fields) != len(base_schema.fields):
+            return False  # schema evolution rewrites the table at flush
+        align_to_schema(df, base_schema).write.mode("append").parquet(path)
+        return True
 
-        self._guard("append", _do)
-
-    def merge(self, cfg, df, ts_guard=None):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            spark = df.sparkSession
-            if not os.path.isdir(path):
-                df.write.mode("overwrite").parquet(path)
-                return
-            base = spark.read.parquet(path)
-            evolved = merge_schemas(base.schema, df.schema)
-            merged = merge_into(
-                align_to_schema(base, evolved),
-                align_to_schema(df, evolved),
-                cfg.primary_keys,
-                ts_guard=ts_guard,
-            )
-            self._overwrite(merged, path)
-
-        self._guard("merge", _do)
-
-    def delete(self, cfg, keys_df, ts_guard=None):
-        def _do():
-            path = self._path(cfg.db, cfg.table)
-            if not os.path.isdir(path):
-                return
-            spark = keys_df.sparkSession
-            base = spark.read.parquet(path)
-            self._overwrite(
-                delete_matching(base, keys_df, cfg.primary_keys, ts_guard=ts_guard),
-                path,
-            )
-
-        self._guard("delete", _do)
+    def _commit(self, cfg, plan):
+        self._overwrite(plan, self._path(cfg.db, cfg.table))
 
     def _overwrite(self, df: DataFrame, path: str) -> None:
-        # Copy-on-write without self-read hazard: write beside, then swap.
-        tmp = path + "._cow_tmp"
+        """Copy-on-write without a self-read hazard or a lost-table window:
+        write beside, move the live directory aside, move the new one in,
+        then delete the aside copy.  A crash between the two moves leaves
+        only the aside copy, which :meth:`_recover` restores."""
+        self._recover(path)
+        tmp, aside = path + "._cow_tmp", path + _ASIDE
         df.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path, ignore_errors=True)
+        if os.path.isdir(path):
+            os.replace(path, aside)
         os.replace(tmp, path)
+        self._schemas[path] = df.schema
+        shutil.rmtree(aside, ignore_errors=True)
 
     def compact(self, db: str, table: str, target_files: int = 1) -> int:
         """Rewrite the table into ``target_files`` files and return the
@@ -594,14 +648,19 @@ class ParquetTableSink(TableSink):
         stand-in for Iceberg's ``rewrite_data_files`` / Delta's
         ``OPTIMIZE`` (the reference leaves this to the lakehouse).
         """
-        path = self._path(db, table)
-        if not os.path.isdir(path):
+        if not self._is_committed(db, table):
             return 0
+        path = self._path(db, table)
         before = len(
             [f for f in os.listdir(path) if f.endswith(".parquet")]
         )
         spark = SparkSession.getActiveSession()
-        df = spark.read.parquet(path)
+        df = self._read_committed(spark, db, table)
         self._overwrite(df.coalesce(target_files), path)
         after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
         return max(before - after, 0)
+
+
+#: suffix of a table directory moved aside during a copy-on-write swap
+_ASIDE = "._cow_old"
+

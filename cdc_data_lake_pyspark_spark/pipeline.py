@@ -8,9 +8,10 @@ library:
   scripts around the same flow — SURVEY §3 takeaway);
 * batch is cached once and re-used across routes (reference ``cache()`` at
   ``transaction_log_util.py:58``);
-* empty-batch short-circuit (``isEmpty()``, ``:56,86,115,150``);
 * single driver round-trip for the (db, table, route) inventory instead of
   the reference's per-route distinct/collect/first storm (SURVEY §4.2.1);
+  an empty inventory is the empty-batch short-circuit (reference
+  ``isEmpty()``, ``:56,86,115,150``) without a job of its own;
 * per-table: payload schema (inferred over the whole slice, or the sink's
   authoritative schema for upserts — ``:138-145``), timestamp-field casts
   (``:195-200``), PK dedup (``:267-273``), then append / merge / delete via
@@ -98,8 +99,6 @@ class CdcPipeline:
     def process_batch(self, batch_df: DataFrame, batch_id: int = 0) -> None:
         """``foreachBatch`` callback: apply one micro-batch of raw envelope
         strings (column ``value``) to the sink."""
-        if batch_df.isEmpty():
-            return
         # A batch inherits the source's partitioning (e.g. #Kafka
         # partitions), which can be far below the cluster's core count.
         # Everything downstream — parse, cache build, per-route scans —
@@ -125,6 +124,8 @@ class CdcPipeline:
             inventory = sorted(
                 table_op_inventory(routed), key=lambda e: (e.db, e.table)
             )
+            if not inventory:
+                return
             workers = min(self.max_parallel_tables, len(inventory))
             if workers <= 1:
                 for entry in inventory:
@@ -195,8 +196,8 @@ class CdcPipeline:
             self._apply_upsert(cfg, tbl)
         if ROUTE_DELETE in entry.routes:
             self._apply_delete(cfg, tbl)
-        # one materialization point per table per batch (lazy sinks
-        # checkpoint here, while the batch cache is still alive)
+        # the table's commit point: buffering sinks write the batch's
+        # plan here, once, while the batch cache is still alive
         self.sink.flush(cfg)
 
     # -- route appliers -------------------------------------------------
@@ -293,23 +294,22 @@ class CdcPipeline:
             sliced, "before", sample_rows=self.schema_sample_rows
         )
         payload = parse_payload(sliced, "before", schema, keep_cols=["ts_ms"])
-        # Only the PK columns matter for DELETE ... WHERE EXISTS; dedup to
-        # the latest per key first so delete-then-reinsert batches resolve
-        # by ts ordering at the route level (reference applies routes in
-        # insert→upsert→delete order; we keep that order).
-        keys_df = latest_change_per_key(payload, cfg.primary_keys, order_by=["ts_ms"])
+        # Only the PK columns matter for DELETE ... WHERE EXISTS.  A key
+        # deleted several times in the batch needs no dedup: the
+        # anti-join / EXISTS ignores repeats, and the guarded delete takes
+        # the latest timestamp per key itself.
         if self.ts_guard:
             # Guarded delete: the delete's envelope timestamp rides along
             # and the sink removes only rows whose guard column is at or
             # before it — a stale delete can't remove a newer image, either
             # cross-batch or within this batch (inserts/upserts apply
             # first, carrying their own guard values).
-            keys_df = keys_df.select(
+            keys_df = payload.select(
                 *cfg.primary_keys, F.col("ts_ms").alias(self.ts_guard)
             )
             self.sink.delete(cfg, keys_df, ts_guard=self.ts_guard)
         else:
-            self.sink.delete(cfg, keys_df.select(*cfg.primary_keys))
+            self.sink.delete(cfg, payload.select(*cfg.primary_keys))
         logger.info("delete applied: %s", cfg.qualified_name)
 
 

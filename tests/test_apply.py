@@ -51,6 +51,19 @@ def test_delete_matching(spark):
     assert out == [0, 2, 4]
 
 
+def test_delete_matching_duplicate_delete_keys(spark):
+    """Repeated delete keys (a key deleted twice in one batch) delete once
+    and never multiply target rows, guarded or not."""
+    target = spark.createDataFrame([Row(id=i, ts=10) for i in range(4)])
+    deletes = spark.createDataFrame(
+        [Row(id=1, ts=20), Row(id=1, ts=20), Row(id=2, ts=5), Row(id=2, ts=30)]
+    )
+    out = sorted(r.id for r in delete_matching(target, deletes, ["id"]).collect())
+    assert out == [0, 3]
+    guarded = delete_matching(target, deletes, ["id"], ts_guard="ts").collect()
+    assert sorted(r.id for r in guarded) == [0, 3]  # id=2: the latest delete wins
+
+
 def test_delete_matching_ts_guard(spark):
     """A delete only removes rows at-or-before its timestamp; newer images
     survive a stale delete."""

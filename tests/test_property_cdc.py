@@ -43,16 +43,49 @@ def _envelope(key: int, op: str, val: int, ts: int) -> str:
     )
 
 
+def reduce_batch(rows: list[dict], events, guard: bool = False) -> list[dict]:
+    """The reduction model for one batch: the table after it, as a list of
+    row dicts keyed ``k``.
+
+    ``rows`` is the table before the batch; ``events`` are ``(key, op,
+    image, ts)`` tuples, ``image`` being the row (the ``before`` image for
+    deletes).  With ``guard`` (the pipeline's ``ts_guard``) every row also
+    carries its change's ``ts``: the merge keeps, per key, the newest of
+    the table's rows and the update (the update wins a tie), and a delete
+    removes only rows at or before its latest ``ts`` for that key.
+    """
+
+    def stamped(image, ts):
+        return dict(image, ts=ts) if guard else dict(image)
+
+    ins = [stamped(p, ts) for (k, op, p, ts) in events if op in ("r", "c")]
+    ups: dict[int, dict] = {}
+    for k, op, p, ts in sorted(events, key=lambda e: e[3]):
+        if op == "u":
+            ups[k] = stamped(p, ts)  # later event (higher ts) wins
+    table = rows + ins
+    if ups and guard:
+        newest: dict[int, tuple] = {}
+        for src, row in [(0, r) for r in table] + [(1, r) for r in ups.values()]:
+            rank = (row["ts"], src)
+            if row["k"] not in newest or rank > newest[row["k"]][0]:
+                newest[row["k"]] = (rank, row)
+        table = [row for _, row in newest.values()]
+    elif ups:
+        table = [r for r in table if r["k"] not in ups] + list(ups.values())
+    dels: dict[int, int] = {}
+    for k, op, p, ts in events:
+        if op == "d":
+            dels[k] = max(dels.get(k, ts), ts)
+    if guard:
+        return [r for r in table if r["k"] not in dels or r["ts"] > dels[r["k"]]]
+    return [r for r in table if r["k"] not in dels]
+
+
 def _expected(events) -> list[tuple[int, int]]:
     """The reduction model: sorted (k, v) multiset of the final state."""
-    ins = [(k, v) for (k, op, v) in events if op in ("r", "c")]
-    ups: dict[int, tuple[int, int]] = {}
-    for ts, (k, op, v) in enumerate(events):
-        if op == "u":
-            ups[k] = (k, v)  # later event (higher ts) wins
-    dels = {k for (k, op, v) in events if op == "d"}
-    after_merge = [p for p in ins if p[0] not in ups] + list(ups.values())
-    return sorted(p for p in after_merge if p[0] not in dels)
+    batch = [(k, op, {"k": k, "v": v}, ts) for ts, (k, op, v) in enumerate(events)]
+    return sorted((r["k"], r["v"]) for r in reduce_batch([], batch))
 
 
 @settings(
